@@ -107,4 +107,3 @@ def word_gram_digests(
     if with_length:
         out.append(F.col("_g.gl").alias("gl"))
     return g.select(*out)
-

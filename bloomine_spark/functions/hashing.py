@@ -67,13 +67,19 @@ def rolling_kgram_hash(
     if n_windows <= 0:
         return np.empty(0, dtype=np.uint64)
     flat = flat.astype(np.uint64, copy=False)
-    h = np.zeros(n_windows, dtype=np.uint64)
     js = range(k - 1, -1, -1) if reverse else range(k)
-    for j in js:
-        # in-place: slices of flat are views, so the whole recurrence
-        # allocates nothing beyond h itself
-        h *= _POLY_P
-        h += flat[j : j + n_windows]
+    # slices of flat are views, so the recurrence allocates only its hash
+    return hash_kgram_columns([flat[j : j + n_windows] for j in js])
+
+
+def hash_kgram_columns(columns) -> np.ndarray:
+    """Hash of many k-grams given as k aligned uint64 token columns
+    (column j holds token j of every k-gram) — the recurrence
+    ``rolling_kgram_hash`` applies to the windows of a flat buffer."""
+    h = np.zeros(len(columns[0]), dtype=np.uint64)
+    for col in columns:
+        h *= _POLY_P  # in place: no temporaries beyond h
+        h += col
     return splitmix64(h, inplace=True)
 
 

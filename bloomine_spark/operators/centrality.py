@@ -263,7 +263,11 @@ def hyperball_harmonic(
         prev_pos = np.flatnonzero(pdf["_is_prev"].to_numpy())
         # every node here is in the previous round's dense state
         # (nodes = src ∪ dst), exactly once — fail loudly, not wrongly
-        assert len(prev_pos) == len(starts)
+        if len(prev_pos) != len(starts):
+            raise RuntimeError(
+                f"merge_fold: {len(prev_pos)} previous-state rows for "
+                f"{len(starts)} nodes; each node needs exactly one"
+            )
         changed = (folded != mat[prev_pos]).any(axis=1)
         changed_acc.add(int(changed.sum()))
         yield pd.DataFrame(

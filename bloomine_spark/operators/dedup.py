@@ -1045,7 +1045,12 @@ def gpt3_window_decontaminate(
     (``bloom_semi_join``), so the only wide exchange carries (probable)
     collisions. Island merge, piece cutting, and the substring rebuild
     are narrow per-doc windows plus ONE doc_id-keyed join back to the
-    text."""
+    text.
+
+    ``materialize_islands`` (perf-only, never changes the pieces):
+    materialize the merged removal spans once for their three consumers
+    instead of letting each re-derive the gram window pass.
+    """
     if n < 1:
         raise ValueError("n must be >= 1")
     base = train.select(

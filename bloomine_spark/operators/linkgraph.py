@@ -148,6 +148,10 @@ def pagerank(
     (1-row aggregates). Rounds needed ≈ log(tol)/log(damping), graph-
     size-independent, so a 100 TB crawl graph costs the same ~20-60
     narrow-shuffle rounds as a toy one.
+
+    ``checkpoint_every`` (perf-only, never changes the ranks): truncate
+    lineage with a local checkpoint every that many fixed-count rounds
+    (and after the last); 1 checkpoints every round.
     """
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
@@ -279,6 +283,10 @@ def hits(
     1-row aggregate. Lineage truncates per round with localCheckpoint.
     Rounds are graph-size-independent, so a 100 TB crawl graph costs
     the same ~8-20 narrow-shuffle rounds.
+
+    ``checkpoint_half_steps`` (perf-only, never changes the scores):
+    also checkpoint the authority half-step; False fuses it into the
+    hub half-step's job.
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")

@@ -5,6 +5,9 @@ re-reads the whole FASTQ (/root/reference/bloomine/run.py:26-61). At 100 TB
 the scan dominates, so this operator screens EVERY target in a single pass:
 window hashes are computed once per batch and each target then pays only
 its (candidate-compressed) Bloom probes and its own survivors' scoring.
+With a declared small vocabulary (``complement_map``, e.g. DNA) even the
+probes are shared: one answer-table gather per window answers every
+target's prescreen (``screen.AnswerTables``).
 
 Output is a long-format score log: one row per (FP-surviving row, target),
 columns (passthrough..., target_id, rc, fp_hits, score, threshold, sp_pass)
@@ -26,12 +29,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bloomine_spark.operators.screen import (
-    FlatWindows,
+    AnswerTables,
     TargetContext,
-    _exact_candidates,
-    _fp_pass_counts,
+    _score_survivors,
     prepare_target,
-    score_runs,
+    prescreen,
 )
 from bloomine_spark.params import ScreenParams
 
@@ -49,33 +51,6 @@ def prepare_targets(
     }
 
 
-def _score_survivors(
-    batch, ctx: TargetContext, win: FlatWindows, row_sel: np.ndarray,
-    reverse: bool, scores: np.ndarray, p: ScreenParams,
-) -> None:
-    """Paint + score one orientation's survivors (shared canvas logic)."""
-    rids, starts = _exact_candidates(win, batch, ctx, row_sel, reverse)
-    if len(rids) == 0:
-        return
-    total_len = len(batch.flat)
-    gpos = batch.offsets[rids] + starts
-    delta = np.zeros(total_len + 1, dtype=np.int32)
-    np.add.at(delta, gpos, 1)
-    np.add.at(delta, gpos + ctx.k, -1)
-    gmask = np.cumsum(delta[:total_len]) > 0
-    edges = np.flatnonzero(np.diff(gmask.view(np.int8)))
-    run_starts = np.concatenate(([0], edges + 1))
-    run_ends = np.concatenate((edges + 1, [total_len]))
-    run_vals = gmask[run_starts]
-    for r in np.unique(rids):
-        o = int(batch.offsets[r])
-        e = o + int(batch.lens[r])
-        i0 = int(np.searchsorted(run_ends, o, side="right"))
-        i1 = int(np.searchsorted(run_starts, e, side="left"))
-        rl = np.minimum(run_ends[i0:i1], e) - np.maximum(run_starts[i0:i1], o)
-        scores[r] = score_runs(run_vals[i0:i1], rl, p)
-
-
 def screen_multi_scores(
     df: DataFrame,
     targets: dict[str, Sequence[int]],
@@ -87,7 +62,8 @@ def screen_multi_scores(
     """Score log for ALL targets from one data pass (scored verify)."""
     spark = df.sparkSession
     ctxs = prepare_targets(targets, params, complement_map)
-    ctx_bc = spark.sparkContext.broadcast(ctxs)
+    tables = AnswerTables.build(list(ctxs.values()))
+    ctx_bc = spark.sparkContext.broadcast((ctxs, tables))
 
     passthrough = [f.name for f in df.schema.fields if f.name != tokens_col]
     fields = [f for f in df.schema.fields if f.name != tokens_col]
@@ -109,13 +85,15 @@ def screen_multi_scores(
     )
 
     def kernel(batches) -> Iterator["pa.RecordBatch"]:
-        ctx_map: dict[str, TargetContext] = ctx_bc.value
+        ctx_map, tables = ctx_bc.value
+        if not ctx_map:
+            return
         for rb0 in batches:
             if rb0.num_rows == 0:
                 continue
-            yield from _slices(rb0, ctx_map)
+            yield from _slices(rb0, ctx_map, tables)
 
-    def _slices(rb0, ctx_map) -> Iterator["pa.RecordBatch"]:
+    def _slices(rb0, ctx_map, tables) -> Iterator["pa.RecordBatch"]:
         # cache-blocking row slices (see screen.py): per-row logic only,
         # so slicing is semantics-free
         for rb in iter_cache_slices(rb0, tokens_col):
@@ -123,46 +101,29 @@ def screen_multi_scores(
             if n == 0:
                 continue
             batch = token_batch_from_arrow(rb, tokens_col)
-            # window hashes computed ONCE, shared by every target
-            win_f = FlatWindows(batch, params.k)
-            win_r: FlatWindows | None = None
+            # window hashes (and table codes) computed ONCE, shared by
+            # every target
+            win_f, win_r, phases = prescreen(
+                batch, list(ctx_map.values()), rc_retry, tables
+            )
 
             frames: list[dict] = []
-            for tid, ctx in ctx_map.items():
-                p = ctx.params
-                bloom = ctx.bloom
-                counts_f = _fp_pass_counts(win_f, bloom, n, None)
-                if ctx.fp_threshold <= 0:
-                    fp_f = np.ones(n, dtype=bool)
-                else:
-                    fp_f = counts_f >= ctx.fp_threshold
-                rc_rows = ~fp_f
-                fp_r = np.zeros(n, dtype=bool)
-                counts_r = np.zeros(n, dtype=np.int64)
-                if rc_retry and rc_rows.any() and ctx.fp_threshold > 0:
-                    if win_r is None:
-                        win_r = FlatWindows(
-                            batch, params.k, reverse=True,
-                            complement_map=complement_map,
-                        )
-                    counts_r = _fp_pass_counts(win_r, bloom, n, rc_rows)
-                    fp_r = rc_rows & (counts_r >= ctx.fp_threshold)
-                fp_any = fp_f | fp_r
+            for (tid, ctx), ph in zip(ctx_map.items(), phases):
+                fp_any = ph.fp_any
                 if not fp_any.any():
                     continue
                 scores = np.zeros(n, dtype=np.int64)
-                _score_survivors(batch, ctx, win_f, fp_f, False, scores, p)
-                if fp_r.any() and win_r is not None:
-                    _score_survivors(batch, ctx, win_r, fp_r, True, scores, p)
+                _score_survivors(batch, ctx, win_f, ph.fp_f, False, scores)
+                if ph.fp_r.any():
+                    _score_survivors(batch, ctx, win_r, ph.fp_r, True, scores)
                 sp_pass = fp_any & (scores >= ctx.mst)
                 idx = np.flatnonzero(fp_any)
                 frames.append(
                     {
                         "idx": idx,
                         "target_id": tid,
-                        "rc": fp_r[idx],
-                        "fp_hits": np.where(fp_r, counts_r, counts_f)[idx]
-                        .astype(np.int32),
+                        "rc": ph.fp_r[idx],
+                        "fp_hits": ph.fp_hits[idx],
                         "score": scores[idx],
                         "threshold": float(ctx.mst),
                         "sp_pass": sp_pass[idx],

@@ -30,12 +30,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bloomine_spark.functions.hashing import hash_kgram_columns
 from bloomine_spark.functions.kgrams import (
     TokenBatch,
-
     distinct_per_row,
-    flatten_token_series,
-
     unique_kgram_hashes,
 )
 from bloomine_spark.params import ScreenParams
@@ -60,6 +58,8 @@ class TargetContext:
     mst: float
     bloom_bytes: bytes
     complement_map: np.ndarray | None = None  # optional vocab permutation
+    # this target's answer tables (screen_scores builds them on the driver)
+    answers: AnswerTables | None = None
 
     _bloom: BloomFilter | None = field(default=None, repr=False, compare=False)
 
@@ -224,17 +224,15 @@ class FlatWindows:
         return starts
 
 
-def _fp_pass_counts(
-    win: FlatWindows, bloom: BloomFilter, n_rows: int, row_mask: np.ndarray | None
+def _row_hit_counts(
+    win: FlatWindows, hit_pos: np.ndarray, n_rows: int,
+    row_mask: np.ndarray | None,
 ) -> np.ndarray:
-    """Distinct-kgram Bloom hit count per row (vectorized F1/A3).
+    """Distinct-kgram filter hit count per row (vectorized F1/A3).
 
-    Probes every flat window, then derives row structure for hits only:
+    Row structure is derived for the hit windows only:
     distinct-hits-per-row == distinct (row, hash) among valid hits.
     """
-    if len(win.hashes) == 0:
-        return np.zeros(n_rows, dtype=np.int64)
-    hit_pos = np.flatnonzero(bloom.contains_hashes(win.hashes))
     if len(hit_pos) == 0:
         return np.zeros(n_rows, dtype=np.int64)
     rows, valid = win.rows_of(hit_pos)
@@ -244,6 +242,159 @@ def _fp_pass_counts(
     hh = win.hashes[hit_pos[valid]]
     uniq = distinct_per_row(rows, hh)
     return np.bincount(rows[uniq], minlength=n_rows)
+
+
+# largest vocab**k for which the screen precomputes answer tables: 1 Mi
+# codes are 8 MB per table at 64 targets and 2 Mi filter probes per target
+ANSWER_TABLE_MAX_CODES = 1 << 20
+
+
+@dataclass
+class AnswerTables:
+    """Every target filter's answer for every k-gram of a small vocabulary.
+
+    A ``complement_map`` of V tokens declares the vocabulary, so a window
+    has one of only V**k k-grams (5**7 = 78,125 for DNA at k=7). Entry
+    ``fwd[c]`` holds bit t == ``ctxs[t].bloom.contains_hashes`` of the
+    forward hash of k-gram code c = sum(tok[j] * V**(k-1-j)); ``rev[c]`` the
+    same for the reverse(-complement) window. The hashes are FlatWindows'
+    (same recurrence, same orientation transform), so one gather per
+    window gives the very answers every per-target probe would — false
+    positives included.
+    """
+
+    vocab: int
+    k: int
+    n_targets: int
+    fwd: np.ndarray  # (V**k,) uint8/16/32/64; (V**k, words) above 64 targets
+    rev: np.ndarray
+
+    @classmethod
+    def build(cls, ctxs: Sequence[TargetContext]) -> AnswerTables | None:
+        """Tables for ``ctxs`` (one k, one complement map), or None when
+        no vocabulary is declared or V**k exceeds ANSWER_TABLE_MAX_CODES."""
+        cmap = ctxs[0].complement_map if ctxs else None
+        if cmap is None:
+            return None
+        v, k = len(cmap), ctxs[0].k
+        n = v**k
+        if n > ANSWER_TABLE_MAX_CODES:
+            return None
+        # token j of every k-gram, in code order; the reverse window is
+        # FlatWindows' transform: complement each token, read right to left
+        place = v ** np.arange(k - 1, -1, -1, dtype=np.int64)
+        digits = (np.arange(n, dtype=np.int64)[:, None] // place) % v
+        h_f = hash_kgram_columns([c.astype(np.uint64) for c in digits.T])
+        h_r = hash_kgram_columns(
+            [cmap[c].astype(np.uint64) for c in digits.T[::-1]]
+        )
+        n_t = len(ctxs)
+        words = -(-n_t // 64)
+        dtype = next(d for d in (np.uint8, np.uint16, np.uint32, np.uint64)
+                     if np.iinfo(d).bits >= min(n_t, 64))
+        fwd = np.zeros((n, words), dtype=dtype)
+        rev = np.zeros((n, words), dtype=dtype)
+        for t, ctx in enumerate(ctxs):
+            bit = dtype(1 << (t % 64))
+            fwd[ctx.bloom.contains_hashes(h_f), t // 64] |= bit
+            rev[ctx.bloom.contains_hashes(h_r), t // 64] |= bit
+        if words == 1:
+            fwd, rev = fwd[:, 0].copy(), rev[:, 0].copy()
+        return cls(v, k, n_t, fwd, rev)
+
+    def codes(self, flat: np.ndarray) -> np.ndarray | None:
+        """int32 k-gram code of every flat window; None when some token is
+        outside the vocabulary (the caller then probes the filters)."""
+        if len(flat) and int(flat.max()) >= self.vocab:
+            return None
+        n_win = max(len(flat) - self.k + 1, 0)
+        tok = flat.astype(np.int32)
+        code = tok[:n_win].copy()
+        for j in range(1, self.k):
+            code *= self.vocab
+            code += tok[j : j + n_win]
+        return code
+
+    def hits(self, table: np.ndarray, codes: np.ndarray) -> list[np.ndarray]:
+        """Per target, the window positions its filter answers "maybe" for."""
+        masks = table[codes]
+        any_hit = masks if masks.ndim == 1 else masks.any(axis=1)
+        pos = np.flatnonzero(any_hit)
+        masks = masks[pos]
+        out = []
+        for t in range(self.n_targets):
+            word = masks if masks.ndim == 1 else masks[:, t // 64]
+            out.append(pos[(word & word.dtype.type(1 << (t % 64))) != 0])
+        return out
+
+
+@dataclass
+class PhaseOne:
+    """One target's prescreen outcome over a batch: distinct filter hits
+    and pass flags, forward and on the reverse retry (forward failures)."""
+
+    counts_f: np.ndarray
+    fp_f: np.ndarray
+    counts_r: np.ndarray
+    fp_r: np.ndarray
+
+    @property
+    def fp_any(self) -> np.ndarray:
+        return self.fp_f | self.fp_r
+
+    @property
+    def fp_hits(self) -> np.ndarray:
+        return np.where(self.fp_r, self.counts_r, self.counts_f).astype(np.int32)
+
+
+def prescreen(
+    batch: TokenBatch,
+    ctxs: Sequence[TargetContext],
+    rc_retry: bool,
+    tables: AnswerTables | None,
+) -> tuple[FlatWindows, FlatWindows | None, list[PhaseOne]]:
+    """Phase 1 (F1 + the F4 reverse retry) for every target of ``ctxs``.
+
+    Window hashes are computed once per orientation and shared by all
+    targets. With answer tables and every token inside their vocabulary,
+    one gather per window and orientation replaces all targets' Bloom
+    probes; otherwise each target probes its filter. Both give the same
+    hits, so the outcome (and any error) is the probe path's.
+    """
+    n = batch.n_rows
+    k, cmap = ctxs[0].k, ctxs[0].complement_map
+    win_f = FlatWindows(batch, k)
+    win_r: FlatWindows | None = None
+    codes = tables.codes(batch.flat) if tables is not None else None
+    hits_f = tables.hits(tables.fwd, codes) if codes is not None else None
+    hits_r = None
+    phases = []
+    for t, ctx in enumerate(ctxs):
+        if hits_f is not None:
+            hit = hits_f[t]
+        else:
+            hit = np.flatnonzero(ctx.bloom.contains_hashes(win_f.hashes))
+        counts_f = _row_hit_counts(win_f, hit, n, None)
+        if ctx.fp_threshold <= 0:
+            fp_f = np.ones(n, dtype=bool)  # FQread.hpp:69 quirk
+        else:
+            fp_f = counts_f >= ctx.fp_threshold
+        rc_rows = ~fp_f
+        fp_r = np.zeros(n, dtype=bool)
+        counts_r = np.zeros(n, dtype=np.int64)
+        if rc_retry and rc_rows.any() and ctx.fp_threshold > 0:
+            if win_r is None:
+                win_r = FlatWindows(batch, k, reverse=True, complement_map=cmap)
+            if codes is not None:
+                if hits_r is None:
+                    hits_r = tables.hits(tables.rev, codes)
+                hit = hits_r[t]
+            else:
+                hit = np.flatnonzero(ctx.bloom.contains_hashes(win_r.hashes))
+            counts_r = _row_hit_counts(win_r, hit, n, rc_rows)
+            fp_r = rc_rows & (counts_r >= ctx.fp_threshold)
+        phases.append(PhaseOne(counts_f, fp_f, counts_r, fp_r))
+    return win_f, win_r, phases
 
 
 def _exact_candidates(
@@ -286,6 +437,48 @@ def _exact_candidates(
         toks = toks[:, ::-1]
     ok = (toks == ctx.kgram_matrix[idx[cand_pos]]).all(axis=1)
     return rows[ok], win.starts_of(cand_pos[ok], rows[ok])
+
+
+def _score_survivors(
+    batch: TokenBatch, ctx: TargetContext, win: FlatWindows,
+    row_sel: np.ndarray, reverse: bool, scores: np.ndarray,
+) -> None:
+    """Scored verify of one orientation's survivors ``row_sel`` into
+    ``scores`` (in place).
+
+    Coverage from exact-verified k-gram candidates is painted onto ONE
+    global canvas (every window interval stays inside its row, so a single
+    cumsum gives every row's mask at once — no per-row allocations).
+    """
+    if not row_sel.any():
+        return
+    rids, starts = _exact_candidates(win, batch, ctx, row_sel, reverse)
+    if len(rids) == 0:
+        return
+    total_len = len(batch.flat)
+    gpos = batch.offsets[rids] + starts
+    delta = np.zeros(total_len + 1, dtype=np.int32)
+    np.add.at(delta, gpos, 1)
+    np.add.at(delta, gpos + ctx.k, -1)
+    gmask = np.cumsum(delta[:total_len]) > 0
+    # global run-length encoding; per row: slice + clip runs
+    edges = np.flatnonzero(np.diff(gmask.view(np.int8)))
+    run_starts = np.concatenate(([0], edges + 1))
+    run_ends = np.concatenate((edges + 1, [total_len]))
+    run_vals = gmask[run_starts]
+    # row-bound run windows for ALL survivors in two vectorized
+    # searchsorteds; the remaining per-row work is the quirk-preserving
+    # O(runs) scoring itself
+    rs = np.unique(rids)
+    offs = batch.offsets[rs]
+    ends = offs + batch.lens[rs]
+    i0s = np.searchsorted(run_ends, offs, side="right")
+    i1s = np.searchsorted(run_starts, ends, side="left")
+    for r, o, e, i0, i1 in zip(
+        rs.tolist(), offs.tolist(), ends.tolist(), i0s.tolist(), i1s.tolist(),
+    ):
+        rl = np.minimum(run_ends[i0:i1], e) - np.maximum(run_starts[i0:i1], o)
+        scores[r] = score_runs(run_vals[i0:i1], rl, ctx.params)
 
 
 def _contains_subarray(
@@ -351,95 +544,34 @@ def make_screen_kernel(
 
     def kernel(batches) -> Iterator["pa.RecordBatch"]:
         ctx: TargetContext = ctx_bc.value
-        p = ctx.params
-        bloom = ctx.bloom
         for rb0 in batches:
             if rb0.num_rows == 0:
                 continue
             # cache-blocking: process the batch in zero-copy row slices so
             # the window-hash/canvas temporaries stay cache-resident (all
             # downstream logic is per-row, so slicing is semantics-free)
-            yield from _screen_slice_iter(rb0, ctx, p, bloom)
+            yield from _screen_slice_iter(rb0, ctx)
 
-    def _screen_slice_iter(rb0, ctx, p, bloom):
+    def _screen_slice_iter(rb0, ctx):
+        p = ctx.params
         for rb in iter_cache_slices(rb0, tokens_col):
             n = rb.num_rows
             if n == 0:
                 continue
             batch = token_batch_from_arrow(rb, tokens_col)
 
-            # ---- phase 1 forward: distinct Bloom-hit counts (F1)
-            win_f = FlatWindows(batch, ctx.k)
-            counts_f = _fp_pass_counts(win_f, bloom, n, None)
-            if ctx.fp_threshold <= 0:
-                fp_f = np.ones(n, dtype=bool)  # FQread.hpp:69 quirk
-            else:
-                fp_f = counts_f >= ctx.fp_threshold
-
-            # ---- phase 1 RC retry, only for forward failures (F4)
-            rc_rows = ~fp_f
-            fp_r = np.zeros(n, dtype=bool)
-            counts_r = np.zeros(n, dtype=np.int64)
-            win_r = None
-            if rc_retry and rc_rows.any() and ctx.fp_threshold > 0:
-                win_r = FlatWindows(
-                    batch, ctx.k, reverse=True,
-                    complement_map=ctx.complement_map,
-                )
-                counts_r = _fp_pass_counts(win_r, bloom, n, rc_rows)
-                fp_r = rc_rows & (counts_r >= ctx.fp_threshold)
-            elif rc_retry and ctx.fp_threshold <= 0:
-                fp_r = np.zeros(n, dtype=bool)  # fwd already passed all
-
-            fp_any = fp_f | fp_r
+            # ---- phase 1: forward, then the RC retry of failures (F1/F4)
+            win_f, win_r, (ph,) = prescreen(batch, [ctx], rc_retry, ctx.answers)
+            fp_f, fp_r, fp_any = ph.fp_f, ph.fp_r, ph.fp_any
             if not fp_any.any():
                 continue
 
             # ---- phase 2: verify survivors
             scores = np.zeros(n, dtype=np.int64)
             if mode == "scored":
-                # coverage from exact-verified k-gram candidates, per
-                # orientation, painted onto ONE global canvas (every window
-                # interval stays inside its row, so a single cumsum gives
-                # every row's mask at once — no per-row allocations)
-                total_len = len(batch.flat)
-                for reverse, row_sel, win in (
-                    (False, fp_f, win_f),
-                    (True, fp_r, win_r),
-                ):
-                    if win is None or not row_sel.any():
-                        continue
-                    rids, starts = _exact_candidates(
-                        win, batch, ctx, row_sel, reverse
-                    )
-                    if len(rids) == 0:
-                        continue
-                    gpos = batch.offsets[rids] + starts
-                    delta = np.zeros(total_len + 1, dtype=np.int32)
-                    np.add.at(delta, gpos, 1)
-                    np.add.at(delta, gpos + ctx.k, -1)
-                    gmask = np.cumsum(delta[:total_len]) > 0
-                    # global run-length encoding; per row: slice + clip runs
-                    edges = np.flatnonzero(np.diff(gmask.view(np.int8)))
-                    run_starts = np.concatenate(([0], edges + 1))
-                    run_ends = np.concatenate((edges + 1, [total_len]))
-                    run_vals = gmask[run_starts]
-                    # row-bound run windows for ALL survivors in two
-                    # vectorized searchsorteds; the remaining per-row work
-                    # is the quirk-preserving O(runs) scoring itself
-                    rs = np.unique(rids)
-                    offs = batch.offsets[rs]
-                    ends = offs + batch.lens[rs]
-                    i0s = np.searchsorted(run_ends, offs, side="right")
-                    i1s = np.searchsorted(run_starts, ends, side="left")
-                    for r, o, e, i0, i1 in zip(
-                        rs.tolist(), offs.tolist(), ends.tolist(),
-                        i0s.tolist(), i1s.tolist(),
-                    ):
-                        rl = np.minimum(run_ends[i0:i1], e) - np.maximum(
-                            run_starts[i0:i1], o
-                        )
-                        scores[r] = score_runs(run_vals[i0:i1], rl, p)
+                _score_survivors(batch, ctx, win_f, fp_f, False, scores)
+                if fp_r.any():
+                    _score_survivors(batch, ctx, win_r, fp_r, True, scores)
                 sp_pass = fp_any & (scores >= ctx.mst)
             elif mode == "exact":
                 contains = _contains_subarray(
@@ -459,9 +591,7 @@ def make_screen_kernel(
             cols = {c: rb.column(rb.schema.get_field_index(c)).take(out_idx)
                     for c in passthrough}
             cols["rc"] = pa.array(fp_r[idx_np])
-            cols["fp_hits"] = pa.array(
-                np.where(fp_r, counts_r, counts_f)[idx_np].astype(np.int32)
-            )
+            cols["fp_hits"] = pa.array(ph.fp_hits[idx_np])
             cols["score"] = pa.array(scores[idx_np].astype(np.int64))
             cols["threshold"] = pa.array(
                 np.full(len(idx_np), float(ctx.mst), dtype=np.float64)
@@ -494,6 +624,7 @@ def screen_scores(
     """
     spark = df.sparkSession
     ctx = prepare_target(target_tokens, params, complement_map)
+    ctx.answers = AnswerTables.build([ctx])
     ctx_bc = spark.sparkContext.broadcast(ctx)
 
     passthrough = [f.name for f in df.schema.fields if f.name != tokens_col]
